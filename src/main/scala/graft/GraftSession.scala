@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Engine-recommended Spark session settings, shared by every driver-contract
-  * main (Bench / Verify / Probe / ScalingBench). These are tuning defaults,
+/** Engine-recommended Spark session settings, shared by every main
+  * (Bench / Verify / Probe / ScalingBench). These are tuning defaults,
   * not semantics: every operator produces identical results under stock
   * configuration.
   *
@@ -28,4 +28,20 @@ object GraftSession {
 
   def tune(b: SparkSession.Builder): SparkSession.Builder =
     tuning.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  /** The single-box session Bench, Verify and Probe run in: `local[cpus]`
+    * with one shuffle partition per core, legacy (non-ANSI) arithmetic so
+    * x/0 is NULL as in the DuckDB oracle, UTC, no UI, WARN logging.
+    */
+  def local(cpus: Int): SparkSession = {
+    val spark = tune(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.ansi.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -291,9 +291,15 @@ object SparkEntry {
       docs.withColumn("_par", pmod(col("doc_id"), lit(2)).cast("int"))
         .repartition(1)
         .write.partitionBy("_par").parquet(stage)
+      def parquetIn(dir: String) = Option(new java.io.File(dir).listFiles()).toSeq.flatten
+        .find(_.getName.endsWith(".parquet"))
       Seq(0, 1).foreach { par =>
-        val part = new java.io.File(s"$stage/_par=$par").listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
+        // an empty parity class has no partition directory: its slice is
+        // an empty file with the documents schema
+        val part = parquetIn(s"$stage/_par=$par").getOrElse {
+          docs.limit(0).coalesce(1).write.parquet(s"$stage/empty$par")
+          parquetIn(s"$stage/empty$par").get
+        }
         java.nio.file.Files.move(part.toPath, inDir.resolve(s"b$par.parquet"))
       }
       val src = s.readStream.schema(docs.schema)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,15 +10,7 @@ object Verify {
     // the dumped subset; the driver always runs without a filter)
     val nameFilter: String => Boolean =
       if (args.length > 2) _.contains(args(2)) else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false") // x/0 → NULL, as in the oracle
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(e => nameFilter(e._1)).foreach { case (name, fn) =>
       try {

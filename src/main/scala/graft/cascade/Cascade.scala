@@ -1,5 +1,6 @@
 package graft.cascade
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.model.{CascadeConfig, FlagCodes}
@@ -25,16 +26,9 @@ object Cascade {
     * per scan. MEMORY_AND_DISK_SER pushes every block through the
     * serializer on each write AND each of the many per-stage re-reads; that
     * CPU is core-count-invariant, i.e. exactly the kind of term that caps
-    * multi-core scaling. Measured A/B on the identical 2M-doc corpus at
-    * local[32] (steady-state rep): SER 304.7 s vs DESER 171.5 s — a 1.78×
-    * end-to-end difference. Default is deserialized;
-    * SPARK_GRAFT_CKPT_LEVEL=ser restores the round-2 behavior for A/Bs.
+    * multi-core scaling (measured, 2M docs at local[32]: 304.7 s SER vs 171.5 s).
     */
-  private val ckptLevel: org.apache.spark.storage.StorageLevel =
-    sys.env.get("SPARK_GRAFT_CKPT_LEVEL") match {
-      case Some("ser") => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-      case _           => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    }
+  private val ckptLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
   /** Per-run registry of the checkpoint RDD ids THIS run created — the
     * sweep scope of [[run]]/[[iterate]]. The previous scope (everything
@@ -75,6 +69,19 @@ object Cascade {
         t.record(sc.getPersistentRDDs.keySet.toSet.diff(before))
         c
     }
+
+  /** Run `f` with its Spark jobs labelled `desc` (the thread-local job
+    * description), then restore the description the caller had — so labels
+    * nest: an inner stats pass relabels its own jobs only, and every job
+    * after it still carries the enclosing stage's (or the caller's) label.
+    */
+  def withJobLabel[T](sc: SparkContext, desc: String)(f: => T): T = {
+    val saved = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(desc)
+    try f finally sc.setLocalProperty(JobDescription, saved)
+  }
+
+  private val JobDescription = "spark.job.description"
 
   /** One cascade stage. `selfRef` marks the self-join shape — the stage
     * aggregates statistics over its input and joins them back, so it scans
@@ -225,21 +232,14 @@ object Cascade {
     * derived — the `f_stats` struct, the row-local ratio features, the
     * detected-language pair — is dead after the prefix and travels as
     * payload, which at corpus scale roughly halves the bytes every light
-    * checkpoint/stat scan moves (measured via SPARK_GRAFT_SPLIT_DEBUG).
-    * SPARK_GRAFT_WIDE_LIGHT=1 restores the carry-all-f_* round-3 set for
-    * A/Bs on identical inputs.
+    * checkpoint/stat scan moves (measured: 195.6 B/row vs 373.0 B/row when
+    * the light set carried url and every f_* column).
     */
   private[cascade] def workingCol(cfg: graft.model.CascadeConfig)(c: String): Boolean =
-    if (wideLight)
-      c == RowId || c == Url || c == Domain || c == Lang ||
-        c == Doit || c == Prio || c == Dqc || c.startsWith("f_")
-    else
-      c == RowId || c == UrlHash || c == Domain || c == Lang ||
-        c == Doit || c == Prio || c == Dqc ||
-        c == NWords || c == DigitRatio || c.startsWith(LogPpl) ||
-        cfg.buddyKeys.contains(c) || cfg.isolationKeys.contains(c)
-
-  private val wideLight: Boolean = sys.env.contains("SPARK_GRAFT_WIDE_LIGHT")
+    c == RowId || c == UrlHash || c == Domain || c == Lang ||
+      c == Doit || c == Prio || c == Dqc ||
+      c == NWords || c == DigitRatio || c.startsWith(LogPpl) ||
+      cfg.buddyKeys.contains(c) || cfg.isolationKeys.contains(c)
 
   /** Group-key dictionary encoding for the light working set: `domain` and
     * `lang` travel as null-preserving xxhash64 codes (one 8-byte fixed slot
@@ -256,25 +256,15 @@ object Cascade {
     * expected colliding PAIRS at 10⁸ domains ≈ (10⁸)²/2⁶⁵ ≈ 3·10⁻⁴, i.e.
     * none, and the consequence is a slightly-blended stat, not corruption
     * (the url already travels as xxhash64 under the same argument).
-    * SPARK_GRAFT_NO_KEYCODE=1 restores string keys for A/Bs.
     */
-  private val keyCode: Boolean = !sys.env.contains("SPARK_GRAFT_NO_KEYCODE")
-
   private[cascade] def encodedKeyCols(cfg: graft.model.CascadeConfig,
                                       outCols: Seq[String]): Seq[String] =
-    if (!keyCode) Nil
-    else Seq(Domain, Lang).filter(c => outCols.contains(c) && workingCol(cfg)(c))
+    Seq(Domain, Lang).filter(c => outCols.contains(c) && workingCol(cfg)(c))
 
   private[cascade] def encodeKeys(df: DataFrame, cols: Seq[String]): DataFrame =
     cols.foldLeft(df)((d, c) =>
       d.withColumn(c,
         when(col(c).isNull, lit(null).cast("long")).otherwise(xxhash64(col(c)))))
-
-  /** Payload split on/off (default on); SPARK_GRAFT_PAYLOAD_SPLIT=off
-    * restores the carry-everything behavior for A/Bs.
-    */
-  private val payloadSplit: Boolean =
-    !sys.env.get("SPARK_GRAFT_PAYLOAD_SPLIT").contains("off")
 
   /** Normalize + stamp lists + fold the enabled checks + final decision.
     * The input of every self-join-shaped stage is materialized first
@@ -327,17 +317,6 @@ object Cascade {
     }
     def sweepExcept(keep: Set[Int]): Unit =
       unpersistIds(tracker.snapshot.diff(keep).diff(protectedIds))
-    def ckpt(d: DataFrame): DataFrame = {
-      val (c, added) = matTracked(d)
-      sweepExcept(added)
-      c
-    }
-    // UI/diagnostic labels for the run's driver-side actions (guide: label
-    // your jobs); thread-local, cleared after each materialization
-    def labeled[T](desc: String)(f: => T): T = {
-      sc.setJobDescription(desc)
-      try f finally sc.setJobDescription(null)
-    }
     /** Fold one selfRef stage over a LAZY input checkpoint: the stage's own
       * stats pass (every selfRef stage measures its per-group statistics
       * with a driver action while its plan is built — that is what makes it
@@ -353,7 +332,7 @@ object Cascade {
       * sweep can never strand an unmaterialized lineage-truncated plan.
       */
     def foldSelfRef(d: DataFrame, s: StageDef): DataFrame =
-      labeled(s"cascade: stage ${s.code}") {
+      withJobLabel(sc, s"cascade: stage ${s.code}") {
         val (c, added) = matTracked(d, eager = false)
         val before = tracker.snapshot
         val out = s.f(c)
@@ -390,7 +369,7 @@ object Cascade {
     val bigEnough =
       pages.queryExecution.optimizedPlan.stats.sizeInBytes >= cfg.payloadSplitMinBytes
     val checked =
-      if (firstSelf < 0 || !payloadSplit || !bigEnough)
+      if (firstSelf < 0 || !bigEnough)
         stageList.foldLeft(prepared) { case (d, s) =>
           if (s.selfRef) foldSelfRef(d, s) else s.f(d) }
       else {
@@ -425,17 +404,6 @@ object Cascade {
             matTracked(encodeKeys(
               full.select(full.columns.filter(workingCol(cfg)).map(col): _*), encKeys))
           sweepExcept(lightIds)
-          // measurement hook for the working-set-width A/B (pair with
-          // SPARK_GRAFT_WIDE_LIGHT): rows and stored bytes of the light
-          // checkpoint, i.e. what every post-prefix stat scan re-reads
-          if (sys.env.contains("SPARK_GRAFT_SPLIT_DEBUG")) {
-            val n = light.count()
-            val bytes = sc.getRDDStorageInfo
-              .filter(i => lightIds.contains(i.id)).map(i => i.memSize + i.diskSize).sum
-            System.err.println(
-              f"[cascade] light working set: $n rows, $bytes bytes (${
-                bytes.toDouble / math.max(n, 1L)}%.1f B/row, cols=${light.columns.length})")
-          }
           foldRest(light)
             .drop(encKeys: _*) // hashed keys: the string originals rejoin below
             .join(payload, Seq(RowId)) // 1:1 by construction

@@ -1,6 +1,7 @@
 package graft.stages
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.analysis.{caseInsensitiveResolution, caseSensitiveResolution}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFeatures
 import graft.model.{CascadeConfig, FlagCodes}
@@ -83,14 +84,21 @@ object Ingest {
     * prefix costs n full analyzer passes; this helper pays one. Expressions
     * must reference only columns of the INPUT frame (they cannot see each
     * other), which withColumn chains where later columns read earlier ones
-    * must keep as separate layers.
+    * must keep as separate layers. Names resolve like withColumn's, under
+    * the session's `spark.sql.caseSensitive`: by default `Text` replaces
+    * `text` (taking the new spelling) instead of appending a duplicate.
     */
   private[graft] def withCols(df: DataFrame, cols: Seq[(String, Column)]): DataFrame = {
-    val m = cols.toMap
-    require(m.size == cols.size, "duplicate column names in withCols")
+    val resolver =
+      if (df.sparkSession.conf.get("spark.sql.caseSensitive").toBoolean) caseSensitiveResolution
+      else caseInsensitiveResolution
+    val names = cols.map(_._1)
+    require(names.indices.forall(i => !names.take(i).exists(resolver(_, names(i)))),
+      "duplicate column names in withCols")
     val existing = df.columns
-    val replaced = existing.map(c => m.get(c).map(_.as(c)).getOrElse(col(c)))
-    val appended = cols.collect { case (n, e) if !existing.contains(n) => e.as(n) }
+    val replaced = existing.map(c =>
+      cols.find(nc => resolver(nc._1, c)).map { case (n, e) => e.as(n) }.getOrElse(col(c)))
+    val appended = cols.collect { case (n, e) if !existing.exists(resolver(_, n)) => e.as(n) }
     df.select(replaced ++ appended: _*)
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.model._
 import graft.stages._
@@ -133,5 +134,44 @@ class CascadeSpec extends SparkSpec {
     val iter = Cascade.run(Docs.pages(spark, sfDir), c2)
       .filter(col(Cols.Dqc) === FlagCodes.Buddy).count()
     assert(iter >= once)
+  }
+
+  test("job labels nest: every job of a run under an outer label carries a label") {
+    // the split and the single-frame path, each followed by a consumer
+    // action: a stage or stats label that cleared the description instead
+    // of restoring it leaves every later job unlabelled
+    val sc = spark.sparkContext
+    val (begin, end) = ("job-label-spec: begin", "job-label-spec: end")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    @volatile var recording, finished = false
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val d = Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+        if (d.contains(begin)) recording = true
+        else if (d.contains(end)) finished = true
+        else if (recording) seen.add(d)
+      }
+    }
+    def marker(label: String): Unit = Cascade.withJobLabel(sc, label) {
+      sc.parallelize(Seq(1), 1).count()
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker(begin)
+      sc.setJobDescription("job-label-spec: outer")
+      try Seq(0L, Long.MaxValue).foreach { minBytes =>
+        Cascade.run(Docs.pages(spark, sfDir), cfg.copy(payloadSplitMinBytes = minBytes)).count()
+      } finally sc.setJobDescription(null)
+      marker(end)
+      // listener events arrive in posting order: once the end marker is
+      // seen, so is every job the runs started
+      val deadline = System.nanoTime() + 60000000000L
+      while (!finished && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(finished, "listener never saw the end marker")
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val labels = seen.asScala.toSeq
+    assert(labels.nonEmpty)
+    assert(labels.forall(_.isDefined), s"${labels.count(_.isEmpty)} unlabelled jobs")
   }
 }

@@ -509,6 +509,15 @@ class FeatureSpec extends SparkSpec {
     assert(active.exists(_.code == FlagCodes.Repetition))
   }
 
+  test("withCols resolves names like withColumn: a case variant replaces the column") {
+    val df = Seq(("a", 1)).toDF("text", "n")
+    val out = Ingest.withCols(df, Seq("TEXT" -> lit("b"), "m" -> lit(2)))
+    assert(out.columns.toSeq === df.withColumn("TEXT", lit("b")).withColumn("m", lit(2)).columns.toSeq)
+    assert(out.columns.toSeq === Seq("TEXT", "n", "m"))
+    assert(out.head().getString(0) === "b")
+    intercept[IllegalArgumentException](Ingest.withCols(df, Seq("x" -> lit(1), "X" -> lit(2))))
+  }
+
   test("payload split: identical output to the single-frame path") {
     // heterogeneous corpus (two domains, an outlier, a passthrough column)
     // through a config with several self-join stages + ingest dedup + caps;

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.cascade.Cascade
-import graft.io.PagesGen
+import graft.io.{Docs, PagesGen}
+import graft.stages.Cols
 import graft.streaming.StreamingFilter
 
 object StreamingSpec {
@@ -84,5 +85,18 @@ class StreamingSpec extends SparkSpec {
       .select("url", "dqc", "keep")
       .collect().map(r => (r.getString(0), r.getInt(1), r.getBoolean(2))).toSeq
     assert(got.nonEmpty && got.sortBy(_._1) === want.sortBy(_._1))
+  }
+
+  test("q_stream_batches completes when one doc_id parity class is empty") {
+    // only even doc_ids: the odd slice is an empty micro-batch
+    val dir = java.nio.file.Files.createTempDirectory("stream_evens").toString
+    Docs.read(spark, sfDir).filter(pmod(col("doc_id"), lit(2)) === 0)
+      .write.parquet(s"$dir/documents.parquet")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("doc_id"), col(Cols.Dqc).cast("int"), col(Cols.KeepCol))
+        .orderBy("doc_id").collect().map(_.toSeq).toSeq
+    val got = rows(SparkEntry.queries("q_stream_batches")(spark, dir))
+    val want = rows(Cascade.run(Docs.pages(spark, dir), SparkEntry.docCfg))
+    assert(got.nonEmpty && got === want)
   }
 }
